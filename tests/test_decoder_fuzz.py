@@ -111,8 +111,11 @@ def test_fuzz_image_and_audio_decoders(rng):
     g_img = _gif([[0, 1, 2, 3]] * 3, PAL4)
     _assert_contract(gif.decode_gif, _mutations(rng, g_img, 150), "gif")
     png = _png([[(1, 2, 3)] * 4] * 3)
-    _assert_contract(multimodal._decode_rgb, _mutations(rng, png, 150),
-                     "png")
+    # IHDR height 2,231,369,731: sized a 24.9 GiB sample buffer before
+    # the pixel budget refused it
+    huge = png[:20] + (2_231_369_731).to_bytes(4, "big") + png[24:]
+    _assert_contract(multimodal._decode_rgb,
+                     _mutations(rng, png, 150) + [huge], "png")
     wav = _wav(8000, [(100, -100)] * 16)
     _assert_contract(multimodal._decode_pcm, _mutations(rng, wav, 150),
                      "wav")

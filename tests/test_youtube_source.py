@@ -1,6 +1,7 @@
-"""Custom DataSource tests (SURVEY.md §5 item 5): page/chunk boundaries,
-token threading, partition fan-out — with the stubbed transport — plus the
-full incremental ETL pipeline run twice (§5 item 3)."""
+"""API source tests (SURVEY.md §5 item 5): page/chunk boundaries, token
+threading, partition fan-out — with the stubbed transport — the
+``scan`` DataFrame against the in-process reader, plus the full
+incremental ETL pipeline run twice (§5 item 3)."""
 
 from __future__ import annotations
 
@@ -9,8 +10,10 @@ import pytest
 from youtube_api_data_etl_automation_spark.pipeline import register_source, run_etl
 from youtube_api_data_etl_automation_spark.sources.youtube_api import (
     API_PAGE_SIZE,
+    _SCHEMAS,
     FakeTransport,
     YouTubeReader,
+    scan,
 )
 
 
@@ -129,12 +132,7 @@ def test_staged_ids_scale_without_driver_list(spark, tmp_path):
     ).write.parquet(p)
 
     register_source(spark)
-    df = (
-        spark.read.format("youtube_api")
-        .option("table", "videos")
-        .option("video_ids_path", p)
-        .load()
-    )
+    df = scan(spark, "videos", video_ids_path=p)
     assert df.rdd.getNumPartitions() == 40
     total_opt_len = sum(len(str(v)) for v in (p, "videos"))
     assert total_opt_len < 500  # options carry a path, not the ids
@@ -143,19 +141,63 @@ def test_staged_ids_scale_without_driver_list(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Through Spark: format("youtube_api") end-to-end
+# Through Spark: scan() end-to-end
 # ---------------------------------------------------------------------------
 def test_source_reads_through_spark(spark):
     register_source(spark)
-    df = (
-        spark.read.format("youtube_api")
-        .option("table", "playlist_items")
-        .option("playlist_ids", "P1,P2")
-        .option("videos_per_playlist", "70")
-        .load()
-    )
+    df = scan(spark, "playlist_items", playlist_ids="P1,P2",
+              videos_per_playlist="70")
     assert df.rdd.getNumPartitions() == 2
     assert df.count() == 140
+
+
+@pytest.mark.parametrize("table,options", [
+    ("channels", {"channel_ids": ",".join(f"c{i}" for i in range(12))}),
+    ("playlist_items", {"playlist_ids": "P1,P2", "videos_per_playlist": "70"}),
+    ("videos", {"video_ids": ",".join(f"v{i}" for i in range(60))}),
+])
+def test_scan_matches_in_process_reader(spark, table, options):
+    """The Arrow batches a scan builds on the executors carry exactly the
+    rows the reader yields in process, under the declared schema — list
+    columns, nulls and int columns included."""
+    reader = YouTubeReader({"table": table, **options})
+    want = sorted((r for p in reader.partitions() for r in reader.read(p)),
+                  key=repr)
+    df = scan(spark, table, **options)
+    assert df.schema == _SCHEMAS[table]
+    got = sorted((tuple(r) for r in df.collect()), key=repr)
+    assert got == want
+    if table == "channels":
+        assert any(r[3] is None for r in got)  # a channel with no country
+    elif table == "playlist_items":
+        assert {r[2] for r in got} == {0, 1}
+        assert all(type(r[2]) is int for r in got)
+    else:
+        assert any(r[4] is None for r in got)  # untagged video
+        assert any(isinstance(r[4], list) and len(r[4]) > 1 for r in got)
+
+
+def test_building_a_scan_starts_no_spark_job(spark, tmp_path):
+    """Partitions are planned in the driver's Python process: building a
+    scan — staged-id footers included — runs no Spark job; only its action
+    does."""
+    p = str(tmp_path / "ids")
+    spark.range(200).selectExpr("concat('v', id) AS videoId").repartition(
+        3
+    ).write.parquet(p)
+    sc = spark.sparkContext
+    group = "scan-construct"
+    sc.setJobGroup(group, "build scans")
+    try:
+        staged = scan(spark, "videos", video_ids_path=p)
+        items = scan(spark, "playlist_items", playlist_ids="P1,P2,P3")
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert staged.rdd.getNumPartitions() == 3
+        assert items.count() == 360
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_full_etl_incremental_semantics(spark, tmp_path):
@@ -194,21 +236,9 @@ def test_etl_grows_with_new_channel(spark, tmp_path):
 def test_retry_recovers_from_transient_failures(spark):
     """Flaky transport fails each call twice; exponential backoff retries
     through it and the scan yields the same rows as the clean transport."""
-    clean = (
-        spark.read.format("youtube_api")
-        .option("table", "channels")
-        .option("channel_ids", "c1,c2,c3")
-        .load()
-    )
-    flaky = (
-        spark.read.format("youtube_api")
-        .option("table", "channels")
-        .option("channel_ids", "c1,c2,c3")
-        .option("transport", "flaky")
-        .option("fail_first", "2")
-        .option("retry_base_ms", "1")
-        .load()
-    )
+    clean = scan(spark, "channels", channel_ids="c1,c2,c3")
+    flaky = scan(spark, "channels", channel_ids="c1,c2,c3", transport="flaky",
+                 fail_first="2", retry_base_ms="1")
     assert sorted(clean.collect()) == sorted(flaky.collect())
 
 

@@ -175,6 +175,11 @@ PNG_SLOW_FILTER_BYTE_BUDGET = 2_000_000
 # the same cap for a uniform refusal.
 BMP_PIXEL_BUDGET = 1 << 24
 
+# PNG's sample buffer is sized from the IHDR dims the same way, before
+# the inflated stream is checked against them — a fuzzed IHDR height of
+# 2.2 billion asked numpy for 24.9 GiB and escaped as MemoryError.
+PNG_PIXEL_BUDGET = 1 << 24
+
 
 def _png_unfilter(raw: bytes, pos: int, h: int, stride: int, bpp: int,
                   slow_filter_budget: int | None, slow_bytes: int):
@@ -347,6 +352,11 @@ def _decode_png(payload: bytes,
     w, h, depth, color, comp, filt, interlace = struct.unpack(">IIBBBBB", ihdr)
     if w == 0 or h == 0:
         raise ValueError(f"malformed PNG: zero dimension ({w}x{h})")
+    if w * h > PNG_PIXEL_BUDGET:
+        raise NotImplementedError(
+            f"PNG {w}x{h} exceeds the {PNG_PIXEL_BUDGET}-pixel budget; "
+            "route to a codec-library executor image"
+        )
     if comp != 0 or filt != 0:
         raise ValueError(
             f"malformed PNG: compression={comp}, filter_method={filt}"

@@ -1,5 +1,7 @@
 """The reference's daily ETL (fetch_youtube_data.py:143-200) as one
-Spark-native pipeline over the custom DataSource.
+Spark-native pipeline over the API source scan
+(``sources/youtube_api.py::scan``: partitions planned in the driver's
+own Python process, read by a ``mapInArrow`` on the executors).
 
 Flow parity (SURVEY.md §3.1):
   E1 channel extract → E2 playlist scan → state read → J1 anti-join →
@@ -24,31 +26,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.incremental import append_delta, overwrite_dim, select_new, sink_exists
-from .sources.youtube_api import YouTubeDataSource
+from .sources.youtube_api import scan
 from .transforms import enrich_videos
 
 
 def register_source(spark: SparkSession) -> None:
-    """Register the custom DataSource, shipping its module BY VALUE.
+    """Ship the source module BY VALUE to the Python workers.
 
-    cloudpickle serializes importable classes by reference; the Python
-    data-source worker processes of a bare session (the driver harness runs
-    the engine from a path-inserted checkout) cannot import this package and
-    would die with PYTHON_DATA_SOURCE_ERROR. register_pickle_by_value makes
-    the whole source module travel inside the pickle instead."""
+    cloudpickle serializes importable functions by reference; the Python
+    workers of a bare session (one that imports the engine from a
+    path-inserted checkout, as ``__spark_entry__`` callers do) cannot
+    import this package and would die with ModuleNotFoundError inside
+    the scan's mapInArrow function. register_pickle_by_value makes the whole source module travel inside
+    the pickle instead, so worker-side code reached from run_etl must live
+    in that module."""
     from pyspark import cloudpickle
 
     from .sources import youtube_api as _src_mod
 
     cloudpickle.register_pickle_by_value(_src_mod)
-    spark.dataSource.register(YouTubeDataSource)
-
-
-def _read(spark: SparkSession, table: str, **options: str) -> DataFrame:
-    reader = spark.read.format("youtube_api").option("table", table)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()
 
 
 # Ids per staged file ⇒ per source-task batch: 2 500 ids = 50 API calls per
@@ -81,7 +77,7 @@ def run_etl(spark: SparkSession, channel_ids: list[str], warehouse: str,
     # non-snapshot source can disagree, so the ids collected, the count
     # reported, and the rows written could come from different snapshots
     # (r6 review). One fetch, one snapshot.
-    channels = _read(
+    channels = scan(
         spark, "channels", channel_ids=",".join(channel_ids), **opts
     ).localCheckpoint()
     counts["channels"] = channels.count()
@@ -91,7 +87,7 @@ def run_etl(spark: SparkSession, channel_ids: list[str], warehouse: str,
     # Same snapshot rule: candidate_ids feeds the count AND the delta
     # anti-join below.
     playlist_ids = [r.playlistId for r in channels.select("playlistId").collect()]
-    items = _read(spark, "playlist_items", playlist_ids=",".join(playlist_ids), **opts)
+    items = scan(spark, "playlist_items", playlist_ids=",".join(playlist_ids), **opts)
     candidate_ids = items.select("videoId").distinct().localCheckpoint()  # A1 (:103)
     counts["candidate_ids"] = candidate_ids.count()
 
@@ -119,7 +115,7 @@ def run_etl(spark: SparkSession, channel_ids: list[str], warehouse: str,
         # own P3) stays driver-side. Each staged file bounds one source
         # task's batch (IDS_PER_STAGED_FILE ids ≈ that many /50 API calls).
         ids_dir = _stage_ids(new_ids, warehouse, counts["new_videos"])
-        videos_raw = _read(spark, "videos", video_ids_path=ids_dir, **opts)
+        videos_raw = scan(spark, "videos", video_ids_path=ids_dir, **opts)
         # T — the 11→19 column transform block (:171-190), one Project
         video_stats = enrich_videos(videos_raw)
         # L1 — idempotent delta append (:194). 'loaded' is what the append

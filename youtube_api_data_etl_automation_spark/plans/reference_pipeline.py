@@ -98,7 +98,7 @@ except ImportError:  # golden not generated yet → honest rows-only check
 @query("reference_etl_video_stats", oracle=_ETL_GOLDEN_ORACLE)
 def reference_etl_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's ENTIRE daily ETL (fetch_youtube_data.py:143-200) run
-    end-to-end over the custom API-shaped DataSource: channel extract →
+    end-to-end over the API-shaped source scan: channel extract →
     partition-per-playlist scan → anti-join delta → 11→19-column enrich →
     idempotent append → dimension overwrite. Returns a per-channel rollup
     of the loaded video_stats table WITH a content fingerprint: md5 over

@@ -1,2 +1,2 @@
 """Sources: Parquet table loaders (driver testdata) and the API-shaped
-custom DataSource with a stubbed transport."""
+source scan with a stubbed transport."""

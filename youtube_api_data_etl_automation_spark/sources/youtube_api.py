@@ -1,4 +1,4 @@
-"""API-shaped custom PySpark DataSource (SURVEY.md §2.1 S1-S3, §7.3).
+"""API-shaped source scan (SURVEY.md §2.1 S1-S3, §7.3).
 
 The reference drives the YouTube Data API v3 with three access patterns:
 - S1 channel batch lookup: one ``channels().list`` for ≤50 comma-joined ids
@@ -8,12 +8,18 @@ The reference drives the YouTube Data API v3 with three access patterns:
 - S3 chunked video lookup: ids sliced into chunks of 50, one
   ``videos().list`` per chunk (:113-119).
 
-Spark-first restatement: a PySpark DataSource whose *partitioning* encodes
-the reference's batching — one partition per playlist (pagination is
+Spark-first restatement: a scan whose *partitioning* encodes the
+reference's batching — one partition per playlist (pagination is
 inherently serial per playlist but playlists fan out across executors, the
 parallelism the reference leaves on the table, SURVEY.md §3.3) and one
 partition per 50-id chunk for video lookups. Page/chunk loops live inside
 ``read(partition)``, so no pagination state ever crosses partitions.
+
+``scan`` plans the partitions in the driver's own Python process and reads
+them with a ``mapInArrow`` over ``spark.range`` — one row and one Spark
+partition per planned partition (SURVEY.md §1.1's source batching as an
+Arrow map over id partitions). Unlike a Python DataSource, building and
+planning the read start no Python subprocess on the driver.
 
 Transport is injectable by name so the source is testable hermetically:
 ``transport=fake`` is a deterministic in-process YouTube API emulator (the
@@ -22,9 +28,10 @@ register under another name with identical response shapes.
 
 Usage::
 
-    spark.dataSource.register(YouTubeDataSource)
-    spark.read.format("youtube_api").option("table", "videos")
-         .option("transport", "fake").option("video_ids", "v1,v2").load()
+    scan(spark, "videos", transport="fake", video_ids="v1,v2")
+
+Workers that cannot import this package (a bare session) need the module
+shipped by value first: ``pipeline.register_source(spark)``.
 """
 
 from __future__ import annotations
@@ -32,7 +39,7 @@ from __future__ import annotations
 import hashlib
 from collections.abc import Iterator, Sequence
 
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 API_PAGE_SIZE = 50  # YouTube API max (fetch_youtube_data.py:90, :113-114)
@@ -375,13 +382,12 @@ class HttpTransport:
 
 
 def make_transport(options: dict):
-    """Transport factory from string options (DataSource options are strings
-    only). 'fake' is the hermetic in-process emulator (the default in this
-    sandbox — no network); 'flaky' wraps it with simulated transient
-    failures (testing the retry path); 'https' is the real YouTube Data
-    API v3 over stdlib urllib, gated on an api_key option or the
-    YOUTUBE_API_KEY env var. Every transport is wrapped in
-    RetryingTransport for quota/5xx backoff."""
+    """Transport factory from string options. 'fake' is the hermetic
+    in-process emulator (the default; needs no network);
+    'flaky' wraps it with simulated transient failures (testing the retry
+    path); 'https' is the real YouTube Data API v3 over stdlib urllib,
+    gated on an api_key option or the YOUTUBE_API_KEY env var. Every
+    transport is wrapped in RetryingTransport for quota/5xx backoff."""
     kind = options.get("transport", "fake")
     if kind == "https":
         import os
@@ -430,18 +436,18 @@ def _resolve_fs(path: str):
     return pafs.LocalFileSystem(), _os.path.abspath(path), pafs
 
 
-class _Partition(InputPartition):
+class _Partition:
     def __init__(self, kind: str, payload):
         self.kind = kind
         self.payload = payload
 
 
-class YouTubeReader(DataSourceReader):
+class YouTubeReader:
     def __init__(self, options: dict):
         self.options = options
         self.table = options.get("table", "videos")
 
-    def partitions(self) -> Sequence[InputPartition]:
+    def partitions(self) -> list[_Partition]:
         if self.table == "channels":
             # S1: ≤50 ids per call → one partition per 50-id batch.
             ids = [c for c in self.options.get("channel_ids", "").split(",") if c]
@@ -471,7 +477,7 @@ class YouTubeReader(DataSourceReader):
         ] or [_Partition("videos", [])]
 
     @staticmethod
-    def _staged_id_partitions(path: str) -> Sequence[InputPartition]:
+    def _staged_id_partitions(path: str) -> list[_Partition]:
         """Plan one partition per (staged file, row group), touching only
         parquet FOOTERS. Listing goes through pyarrow's FileSystem
         abstraction (resolved from the path's scheme), so a warehouse on
@@ -585,16 +591,34 @@ class YouTubeReader(DataSourceReader):
             )
 
 
-class YouTubeDataSource(DataSource):
-    """``spark.read.format("youtube_api")`` — API-shaped source with the
-    reference's batching encoded as partitioning."""
+def scan(spark: SparkSession, table: str, **options: str) -> DataFrame:
+    """The ``table`` read as a DataFrame: partitions are planned here, in
+    the driver's own Python process, and read by a ``mapInArrow`` over
+    ``spark.range`` with one row and one Spark partition per planned
+    partition. Planning raises what ``YouTubeReader.partitions`` raises;
+    on the staged-id path it reads parquet footers only, and the closure
+    carries ``(file, row_group)`` payloads, never ids."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    @classmethod
-    def name(cls) -> str:
-        return "youtube_api"
+    schema = _SCHEMAS[table]
+    arrow_schema = to_arrow_schema(schema)
+    reader = YouTubeReader({**options, "table": table})
+    parts = reader.partitions()
 
-    def schema(self):
-        return _SCHEMAS[self.options.get("table", "videos")]
+    def read(batches):
+        # Each input row is a partition index. The batch is built against
+        # the declared schema: inferred, page_index would come out int64
+        # where Spark reads an int.
+        import pyarrow as pa
 
-    def reader(self, schema) -> YouTubeReader:
-        return YouTubeReader(dict(self.options))
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                rows = list(reader.read(parts[i]))
+                if rows:
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array(col, type=f.type)
+                         for col, f in zip(zip(*rows), arrow_schema)],
+                        schema=arrow_schema,
+                    )
+
+    return spark.range(0, len(parts), 1, len(parts)).mapInArrow(read, schema)
